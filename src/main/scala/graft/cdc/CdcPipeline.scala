@@ -71,7 +71,7 @@ final class CdcPipeline(spark: SparkSession, warehousePath: String) {
     val df = CdcOps.lowercaseColumns(raw).persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val n = df.count() // M2 (reference: processData.py:303)
-      if (df.isEmpty)    // M3 (reference: processData.py:305)
+      if (n == 0)        // M3 (reference: processData.py:305)
         return RunSummary(cfg.tableName, initialLoad = false, inputRows = 0)
       val table = tableFor(cfg)
       val summary =
@@ -92,9 +92,9 @@ final class CdcPipeline(spark: SparkSession, warehousePath: String) {
     */
   private def runInitial(
       cfg: TableConfig, table: CowTable, df: DataFrame, n: Long): RunSummary = {
-    val payload = CdcOps.dropBookkeeping(df)
-    if (!payload.isEmpty) // reference: processData.py:340
-      table.bulkInsert(payload, cfg.bulkInsertParallelism)
+    // run() returned early on an empty batch, so the payload has rows
+    // (reference: processData.py:340 tests emptiness here)
+    table.bulkInsert(CdcOps.dropBookkeeping(df), cfg.bulkInsertParallelism)
     RunSummary(cfg.tableName, initialLoad = true, inputRows = n, inserted = n)
   }
 
@@ -148,31 +148,24 @@ final class CdcPipeline(spark: SparkSession, warehousePath: String) {
       if (cfg.cdcSplitUpsert) {
         // K4 — route pure inserts through the cheap append path
         // (reference: processData.py:348-362).
+        // one count per routed frame doubles as its emptiness test
         val ins = CdcOps.dropBookkeeping(CdcOps.inserts(latest))
-        if (!ins.isEmpty) {
-          inserted = ins.count()
-          table.insertAppend(ins, cfg.bulkInsertParallelism)
-        }
+        inserted = ins.count()
+        if (inserted > 0) table.insertAppend(ins, cfg.bulkInsertParallelism)
         val upd = CdcOps.dropBookkeeping(CdcOps.updates(latest))
-        if (!upd.isEmpty) {
-          upserted = upd.count()
-          table.upsert(upd, cfg.upsertParallelism)
-        }
+        upserted = upd.count()
+        if (upserted > 0) table.upsert(upd, cfg.upsertParallelism)
       } else {
         // K2 — everything but deletes goes through the merge
         // (reference: processData.py:365-374).
         val upserts = CdcOps.dropBookkeeping(CdcOps.nonDeletes(latest))
-        if (!upserts.isEmpty) {
-          upserted = upserts.count()
-          table.upsert(upserts, cfg.upsertParallelism)
-        }
+        upserted = upserts.count()
+        if (upserted > 0) table.upsert(upserts, cfg.upsertParallelism)
       }
       // K3 — deletes last (reference: processData.py:377-382).
       val dels = CdcOps.dropBookkeeping(CdcOps.deletes(latest))
-      if (!dels.isEmpty) {
-        deleted = dels.count()
-        table.delete(dels, cfg.upsertParallelism)
-      }
+      deleted = dels.count()
+      if (deleted > 0) table.delete(dels, cfg.upsertParallelism)
       RunSummary(cfg.tableName, initialLoad = false, inputRows = n,
         inserted = inserted, upserted = upserted, deleted = deleted)
     } finally latest.unpersist()

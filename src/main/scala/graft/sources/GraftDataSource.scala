@@ -2,16 +2,16 @@ package graft.sources
 
 import java.util.{Map => JMap}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.table.CowTable
+import graft.table.{CowTable, ManifestListing}
 
 /** DataSource V2 read integration: any Spark job (SQL-only included) reads
   * a graft table through the standard source API —
@@ -24,7 +24,8 @@ import graft.table.CowTable
   *
   * The provider resolves the table's CURRENT manifest (or `versionAsOf`
   * for time travel), and serves exactly that snapshot's base-file listing
-  * through Spark's native parquet V2 table — so column pruning, filter
+  * ([[ManifestListing]], no file-system listing) through Spark's native
+  * parquet V2 scan — so column pruning, filter
   * pushdown, row-group pruning via the retained partition-column stats,
   * and vectorized reading all come from the stock parquet path. No schema
   * inference pass: the manifest's schema is authoritative.
@@ -170,10 +171,10 @@ class GraftDataSource extends TableProvider with DataSourceRegister
 }
 
 object GraftDataSource {
-  /** Build the served V2 table for an existing manifest: the native
-    * parquet delegate over the (option-ranged) snapshot file listing plus
-    * the pushed-filter skipping context. Shared by the path provider and
-    * [[GraftCatalog]].
+  /** Build the served V2 table for an existing manifest: the
+    * manifest-served file index over the (option-ranged) snapshot listing
+    * plus the pushed-filter skipping context. Shared by the path provider
+    * and [[GraftCatalog]].
     */
   private[sources] def tableFor(
       spark: SparkSession,
@@ -204,22 +205,17 @@ object GraftDataSource {
       if ("clean".equalsIgnoreCase(options.getOrDefault("dvMode", "")))
         ranged.filterNot(m.dvs.contains)
       else ranged
-    val files = listed.map(f => CowTable.resolveFile(base, f))
-    val delegate = ParquetTable(
-      s"graft:$base@v${m.version}",
-      spark,
-      options,
-      files.toIndexedSeq,
-      Some(schema),
-      classOf[ParquetFileFormat])
-    new GraftWritableTable(base, options, Some(delegate),
+    val served = ManifestListing.files(spark,
+      listed.map(f => CowTable.resolveFile(base, f)), schema,
+      options.asCaseSensitiveMap.asScala.toMap)
+    new GraftWritableTable(base, options, Some(served),
       // pushed-filter file skipping starts from the option-ranged listing
       Some((m, listed, schema)), acceptAnySchema)
   }
 }
 
-/** The V2 table served by [[GraftDataSource]]: reads delegate to Spark's
-  * native parquet table over the pinned snapshot file list; writes go
+/** The V2 table served by [[GraftDataSource]]: reads go to Spark's native
+  * parquet scan over the pinned snapshot file list; writes go
   * through the V2→V1 bridge (`V1Write`/`InsertableRelation`) straight into
   * the table-format layer —
   *
@@ -243,7 +239,8 @@ object GraftDataSource {
 private[sources] class GraftWritableTable(
     base: String,
     options: CaseInsensitiveStringMap,
-    delegate: Option[ParquetTable],
+    // the snapshot listing's file index — present when the table exists
+    served: Option[ManifestListing.Files],
     // (manifest, option-pruned file listing, read schema) — present when
     // the table exists; drives pushed-filter file skipping in the scan
     scanCtx: Option[(graft.table.Manifest, Seq[String], StructType)] = None,
@@ -272,7 +269,8 @@ private[sources] class GraftWritableTable(
     true
   }
 
-  override def name(): String = delegate.map(_.name)
+  override def name(): String = scanCtx
+    .map { case (m, _, _) => s"graft:$base@v${m.version}" }
     .getOrElse(s"graft:$base (uncreated)")
 
   /** Table root on disk — lets the SQL mutation rule re-open the table
@@ -305,7 +303,7 @@ private[sources] class GraftWritableTable(
   }
 
   override def schema(): StructType =
-    delegate.map(d => d.schema: StructType).getOrElse(new StructType())
+    served.map(_.schema).getOrElse(new StructType())
 
   /** Declared layout: identity transforms for the hive-style partition
     * columns plus the key-hash bucket transform when the table is
@@ -322,7 +320,7 @@ private[sources] class GraftWritableTable(
 
   override def capabilities(): java.util.Set[TableCapability] = {
     val caps = new java.util.HashSet[TableCapability]()
-    delegate.foreach(d => caps.addAll(d.capabilities()))
+    if (served.nonEmpty) caps.add(TableCapability.BATCH_READ)
     // BATCH_WRITE is what DataFrameWriter.save's V2-vs-V1 branch checks;
     // the actual executor is still the V1 fallback (AppendDataExecV1),
     // selected later by the Write object being a V1Write.
@@ -334,8 +332,8 @@ private[sources] class GraftWritableTable(
   }
 
   override def newScanBuilder(opts: CaseInsensitiveStringMap) =
-    (delegate, scanCtx) match {
-      case (Some(_), Some((m, files, schema))) =>
+    (served, scanCtx) match {
+      case (Some(listing), Some((m, files, schema))) =>
         // with GraftExtensions installed this scan is never built for a
         // DV'd listing — GraftDvReadRule rewrote the relation during
         // analysis. Reaching here without the rule means the raw parquet
@@ -347,9 +345,8 @@ private[sources] class GraftWritableTable(
             "(spark.sql.extensions) so reads apply them, or run " +
             "compact() to fold them into clean files")
         new GraftScanBuilder(
-          org.apache.spark.sql.SparkSession.active, base, m, files,
+          org.apache.spark.sql.SparkSession.active, base, m, files, listing,
           schema, options)
-      case (Some(d), None) => d.newScanBuilder(opts)
       case _ => throw new IllegalArgumentException(
         s"not a graft table (no _commits): $base")
     }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions.{broadcast, col}
 
-import graft.table.CowTable
+import graft.table.{CowTable, ManifestListing}
 
 /** Read-path rewrite for tables with DELETION VECTORS (install via
   * [[graft.functions.GraftExtensions]]): a graft relation whose served
@@ -69,8 +69,8 @@ class GraftDvReadRule(session: SparkSession) extends Rule[LogicalPlan] {
     // both sides join in CowTable.dvScanId/readDvPositions' absolute
     // path space so a relocated or cloned table keeps matching its
     // sidecars
-    val withMeta = session.read.schema(m.schema)
-      .parquet(dvd.map(f => CowTable.resolveFile(base, f)): _*)
+    val withMeta = ManifestListing.read(session, m.schema,
+        dvd.map(f => CowTable.resolveFile(base, f)))
       .select(names.map(col) :+
         CowTable.dvScanId(col("_metadata.file_path")).as(fileC) :+
         col("_metadata.row_index").as(posC): _*)

@@ -1,5 +1,7 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions.{
@@ -9,14 +11,12 @@ import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
 import org.apache.spark.sql.connector.read.{
   Scan, ScanBuilder, SupportsPushDownAggregates,
   SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.FileScanBuilder
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
 import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.table.{CowTable, Manifest}
+import graft.table.{CowTable, Manifest, ManifestListing}
 
 /** Scan builder that turns PUSHED-DOWN Catalyst filters into FILE-level
   * data skipping against the manifest's recorded per-file [min, max]
@@ -32,7 +32,8 @@ import graft.table.{CowTable, Manifest}
   * (`statsCols`, plus the record key via the file index) shrink the file
   * list BEFORE any parquet footer is opened, and equality predicates on
   * string partition columns prune whole partition listings. The inner
-  * builder is Spark's native parquet one rebuilt over the pruned listing,
+  * builder is Spark's native parquet one rebuilt over the pruned listing
+  * (served from the manifest by [[ManifestListing]], never re-listed),
   * so row-group pruning, column pruning, and vectorized reading are
   * unchanged on top. Superset contract throughout ([[CowTable
   * .filesForRange]]): stat-less files stay, non-order-preserving encodings
@@ -43,6 +44,8 @@ private[sources] class GraftScanBuilder(
     base: String,
     m: Manifest,
     initialFiles: Seq[String],
+    // the table's served listing of initialFiles (the unpruned scan)
+    initialListing: ManifestListing.Files,
     schema: StructType,
     options: CaseInsensitiveStringMap)
   extends ScanBuilder
@@ -59,16 +62,13 @@ private[sources] class GraftScanBuilder(
     s"GraftScanBuilder built over a DV'd listing at $base")
 
   private def mkInner(files: Seq[String]): FileScanBuilder =
-    ParquetTable(
-      s"graft:$base@v${m.version}",
-      spark,
-      options,
-      files.map(f => CowTable.resolveFile(base, f)).toIndexedSeq,
-      Some(schema),
-      classOf[ParquetFileFormat])
-      .newScanBuilder(options).asInstanceOf[FileScanBuilder]
+    ManifestListing.files(spark,
+      files.map(f => CowTable.resolveFile(base, f)), schema,
+      options.asCaseSensitiveMap.asScala.toMap)
+      .scanBuilder(spark, options)
 
-  private var inner: FileScanBuilder = mkInner(initialFiles)
+  private var inner: FileScanBuilder =
+    initialListing.scanBuilder(spark, options)
 
   // captured push-down state so the runtime-filter scan can rebuild the
   // inner parquet scan over a SMALLER listing with identical semantics

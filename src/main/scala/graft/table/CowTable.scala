@@ -3,10 +3,10 @@ package graft.table
 import scala.collection.immutable.ListMap
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, DateType, NumericType, StructField, StructType, TimestampType}
+import org.apache.spark.sql.types.{DataType, DateType, LongType, NumericType, StringType, StructField, StructType, TimestampType}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -830,8 +830,8 @@ class CowTable(
       if (dvd.isEmpty) clean
       else {
         val cols = m.schema.fieldNames.toIndexedSeq.map(col)
-        val withMeta = spark.read.schema(addDirCols(m.schema))
-          .parquet(dvd.map(f => CowTable.resolveFile(basePath, f)): _*)
+        val withMeta = ManifestListing.read(spark, addDirCols(m.schema),
+            dvd.map(f => CowTable.resolveFile(basePath, f)))
           .select(cols :+
             CowTable.dvScanId(col("_metadata.file_path")).as(DvFileCol) :+
             col("_metadata.row_index").as(DvPosCol): _*)
@@ -858,8 +858,8 @@ class CowTable(
       spark.createDataFrame(
         java.util.Collections.emptyList[Row](), schema)
     else
-      spark.read.schema(addDirCols(schema))
-        .parquet(files.map(f => CowTable.resolveFile(basePath, f)): _*)
+      ManifestListing.read(spark, addDirCols(schema),
+        files.map(f => CowTable.resolveFile(basePath, f)))
         .select(cols: _*)
   }
 
@@ -1491,9 +1491,8 @@ class CowTable(
       m.schema.fields.filter(f => idCols.contains(f.name)))
     // column-pruned candidate scan: key/partition columns + the
     // row's scan identity — never the payload
-    val cur0 = spark.read.schema(addDirCols(idSchema))
-      .parquet(candFiles.map(f =>
-        CowTable.resolveFile(basePath, f)): _*)
+    val cur0 = ManifestListing.read(spark, addDirCols(idSchema),
+        candFiles.map(f => CowTable.resolveFile(basePath, f)))
       .select(idCols.toIndexedSeq.map(col) :+
         CowTable.dvScanId(col("_metadata.file_path")).as(DvFileCol) :+
         col("_metadata.row_index").as(DvPosCol): _*)
@@ -1567,14 +1566,11 @@ class CowTable(
     val dir = new Path(basePath,
       s"files/dv$v-${java.util.UUID.randomUUID.toString.take(8)}")
     positions.coalesce(parts).write.mode("overwrite").parquet(dir.toString)
+    val written = listParquet(dir)
+    ManifestListing.StatusCache.putFiles(written)
     val base = new Path(basePath)
-    val out = scala.collection.mutable.Buffer.empty[String]
-    val it = fs.listFiles(dir, true)
-    while (it.hasNext) {
-      val f = it.next().getPath
-      if (f.getName.endsWith(".parquet")) out += relativize(base, f)
-    }
-    if (out.isEmpty) { fs.delete(dir, true); Nil } else out.toSeq
+    if (written.isEmpty) { fs.delete(dir, true); Nil }
+    else written.map(st => relativize(base, st.getPath))
   }
 
   /** Partition lifecycle (the Hudi `delete_partition` / `ALTER TABLE …
@@ -2002,8 +1998,8 @@ class CowTable(
     val readSchema = StructType(
       schema.fields.filter(f =>
         keyCols.contains(f.name) || liveStats.contains(f.name)))
-    val df = spark.read.schema(readSchema)
-      .parquet(rel.map(f => s"$basePath/$f"): _*)
+    val df = ManifestListing.read(spark, readSchema,
+        rel.map(f => s"$basePath/$f"))
       .select(input_file_name().as("f") +:
         keyStringExpr(enc, c => readSchema(c).dataType).as("k") +:
         liveStats.map(c =>
@@ -2127,9 +2123,8 @@ class CowTable(
               val cs = liveStats.zipWithIndex.collect {
                 case (c, i) if smn(i) != null => c -> Seq(smn(i), smx(i))
               }.toMap
-              val fileBytes = scala.util.Try(
-                fs.getFileStatus(new Path(basePath, relPath)).getLen)
-                .getOrElse(-1L)
+              val fileBytes = scala.util.Try(ManifestListing.StatusCache
+                .length(fs, new Path(basePath, relPath))).getOrElse(-1L)
               relPath -> FileStat(mn, mx, ref, cs, rows = nRows,
                 bytes = fileBytes, colBloomRefs = cbRefs)
             }
@@ -2872,16 +2867,8 @@ class CowTable(
       throw t
     }
     val base = new Path(basePath)
-    val out = scala.collection.mutable.Buffer.empty[String]
-    var rows = 0L
-    val it = fs.listFiles(dir, true)
-    while (it.hasNext) {
-      val f = it.next().getPath
-      if (f.getName.endsWith(".parquet")) {
-        out += relativize(base, f)
-        rows += parquetRowCount(f)
-      }
-    }
+    val written = listParquet(dir)
+    val rows = written.iterator.map(st => parquetRowCount(st.getPath)).sum
     // Belt to the probe above: a delete of zero keys leaves no tombstone
     // record (and no empty dir). The guard must count ROWS, not files:
     // Spark always keeps partition 0's writer so an empty coalesce(1)
@@ -2889,7 +2876,11 @@ class CowTable(
     // downstream change-feed window onto the D-union path (and accrete a
     // junk file + manifest entry per commit) for nothing. The count is
     // one driver-side footer read of the single part file, no job.
-    if (rows == 0L) { fs.delete(dir, true); Nil } else out.toSeq
+    if (rows == 0L) { fs.delete(dir, true); Nil }
+    else {
+      ManifestListing.StatusCache.putFiles(written)
+      written.map(st => relativize(base, st.getPath))
+    }
   }
 
   /** Row count from a parquet file's FOOTER (driver-side metadata read,
@@ -2903,27 +2894,33 @@ class CowTable(
     try r.getRecordCount finally r.close()
   }
 
-  /** Recursively list a commit dir's parquet files, keyed by partition. */
-  private def listCommitFiles(dir: Path): Map[String, Seq[String]] = {
-    val base = new Path(basePath)
-    val out = scala.collection.mutable.Map.empty[String, Vector[String]]
+  /** Recursively list a freshly written dir's parquet files. */
+  private def listParquet(dir: Path): Vector[FileStatus] = {
+    val out = Vector.newBuilder[FileStatus]
     val it = fs.listFiles(dir, true)
     while (it.hasNext) {
-      val f = it.next().getPath
-      if (f.getName.endsWith(".parquet")) {
-        val relToCommit = relativize(dir, f)
-        val partKey = relToCommit.split('/').dropRight(1).iterator
-          .filter(_.startsWith(DirColPrefix))
-          .map { seg =>
-            val eq = seg.indexOf('=')
-            seg.substring(DirColPrefix.length, eq) + "=" +
-              unescapePathName(seg.substring(eq + 1))
-          }.mkString("/")
-        val relToBase = relativize(base, f)
-        out.update(partKey, out.getOrElse(partKey, Vector.empty) :+ relToBase)
-      }
+      val st = it.next()
+      if (st.getPath.getName.endsWith(".parquet")) out += st
     }
-    out.toMap
+    out.result()
+  }
+
+  /** Recursively list a commit dir's parquet files, keyed by partition,
+    * and record their statuses so reads of this commit list nothing.
+    */
+  private def listCommitFiles(dir: Path): Map[String, Seq[String]] = {
+    val base = new Path(basePath)
+    val written = listParquet(dir)
+    ManifestListing.StatusCache.putFiles(written)
+    written.map(_.getPath).groupBy { f =>
+      relativize(dir, f).split('/').dropRight(1).iterator
+        .filter(_.startsWith(DirColPrefix))
+        .map { seg =>
+          val eq = seg.indexOf('=')
+          seg.substring(DirColPrefix.length, eq) + "=" +
+            unescapePathName(seg.substring(eq + 1))
+        }.mkString("/")
+    }.view.mapValues(_.map(relativize(base, _))).toMap
   }
 
   private def relativize(base: Path, f: Path): String = {
@@ -4458,6 +4455,9 @@ object CowTable {
     */
   val DvFileCol = "_graft_dv_file"
   val DvPosCol = "_graft_dv_pos"
+  /** A deletion-vector sidecar row: the dead row's file and position. */
+  private val DvSidecarSchema = StructType(Seq(
+    StructField(DvFileCol, StringType), StructField(DvPosCol, LongType)))
 
   private val SchemePrefixRe = "^[a-zA-Z][a-zA-Z0-9+.\\-]*:/+"
 
@@ -4507,8 +4507,8 @@ object CowTable {
   private[graft] def readDvPositions(
       spark: SparkSession, basePath: String, refs: Seq[String])
       : DataFrame = {
-    val raw = spark.read
-      .parquet(refs.map(f => resolveFile(basePath, f)): _*)
+    val raw = ManifestListing.read(spark, DvSidecarSchema,
+        refs.map(f => resolveFile(basePath, f)))
       .select(col(DvFileCol), col(DvPosCol),
         dvScanId(col("_metadata.file_path")).as("__graft_dv_sc"))
     val sidecarRoot = regexp_replace(col("__graft_dv_sc"),

@@ -5,6 +5,8 @@ import scala.util.control.NonFatal
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame}
 
+import graft.table.ManifestListing
+
 /** Scan-parallelism floor for compute-heavy operators (optimization guide
   * §2.6 stragglers / §6 input split size).
   *
@@ -34,17 +36,6 @@ import org.apache.spark.sql.{Column, DataFrame}
   * downstream.
   */
 object ScanPar {
-  /** Per-path length cache: the gate runs at query CONSTRUCTION time, so
-    * repeated construction of the same operator (bench reps, shared
-    * operator helpers) would otherwise issue a fresh getFileStatus RPC
-    * per input file each time (r13 ADVICE). Commit-addressed data files
-    * are immutable-by-path here, so a cached length never goes stale for
-    * the gate's purpose (a heuristic split estimate). Bounded: cleared
-    * wholesale past 4096 entries.
-    */
-  private val lenCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
   /** A silently-disabled floor is undiagnosable (r13 ADVICE): when the
     * gate skips on an exception, say so once per site at debug level.
     */
@@ -64,15 +55,17 @@ object ScanPar {
     val maxSplit =
       try spark.sessionState.conf.filesMaxPartitionBytes
       catch { case NonFatal(_) => 128L * 1024 * 1024 }
+    // The gate runs at query CONSTRUCTION time, so repeated construction
+    // of the same operator (bench reps, shared operator helpers) would
+    // otherwise stat every input file each time: lengths come from the
+    // table layer's status cache, and a miss is stat-ed once and cached.
     val splits =
       try {
         val conf = spark.sparkContext.hadoopConfiguration
-        if (lenCache.size > 4096) lenCache.clear()
         files.iterator.map { f =>
-          val len: Long = lenCache.computeIfAbsent(f, { _ =>
-            val p = new Path(f)
-            p.getFileSystem(conf).getFileStatus(p).getLen
-          })
+          val p = new Path(f)
+          val len =
+            ManifestListing.StatusCache.length(p.getFileSystem(conf), p)
           math.max(1L, (len + maxSplit - 1) / maxSplit)
         }.sum
       } catch { case NonFatal(e) => skipped("fileStatus", e); return df }

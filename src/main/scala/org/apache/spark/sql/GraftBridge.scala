@@ -15,4 +15,20 @@ object GraftBridge {
     */
   def drainListeners(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** `StructType.asNullable` (private[spark]): nullable at every nesting
+    * level, as file sources read a user-specified data schema.
+    */
+  def asNullable(s: types.StructType): types.StructType = s.asNullable
+
+  /** The existence check `spark.read` runs over explicit (non-glob) file
+    * paths: throws `PATH_NOT_FOUND` for the first missing one.
+    */
+  def checkFilesExist(paths: Seq[String],
+      conf: org.apache.hadoop.conf.Configuration): Unit = {
+    execution.datasources.DataSource.checkAndGlobPathIfNecessary(paths,
+      conf, checkEmptyGlobPath = true, checkFilesExist = true,
+      enableGlobbing = false)
+    ()
+  }
 }

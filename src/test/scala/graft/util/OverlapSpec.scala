@@ -18,6 +18,20 @@ class OverlapSpec extends AnyFunSuite {
     assert(e.getMessage == "bg boom")
   }
 
+  test("bg failure surfaces even when the body never awaits it") {
+    // a side-effect-only background job (an index upsert overlapped with
+    // verification) whose body ignores the awaiter must not lose its
+    // failure once the body succeeds
+    val bodyRan = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[RuntimeException] {
+      Overlap.withBg[Unit, Int] { throw new RuntimeException("bg boom") } {
+        _ => bodyRan.set(true); 7
+      }
+    }
+    assert(e.getMessage == "bg boom")
+    assert(bodyRan.get(), "the body still runs to completion")
+  }
+
   test("body failure propagates AND the bg work is awaited first") {
     // the orphan hazard this helper exists for: the body throwing must
     // not leave the background computation running detached
